@@ -12,8 +12,9 @@ A from-scratch rebuild of the *capabilities* of elodina/syslog-kafka
   embedding similarity search, text analysis, multimodal column plumbing
 
 Architecture is Spark-first: logical plans are declared with the
-DataFrame/SQL API and optimized by Catalyst; Python UDFs appear only where
-built-ins cannot express the semantics (wire encodings, multimodal decode),
+DataFrame/SQL API and optimized by Catalyst. The Avro and proto wire
+encoders are Catalyst projections too; Python UDFs appear only where
+built-ins cannot express the semantics (wire decode, multimodal decode),
 and then always as Arrow-batched pandas UDFs.
 """
 

@@ -49,6 +49,13 @@ def write_string(s: str) -> bytes:
     return write_long(len(b)) + b
 
 
+def write_map(m: dict) -> bytes:
+    """Avro map<string,string>: one block in sorted-key order (see the
+    module note), then the zero-count end marker."""
+    body = b"".join(write_string(k) + write_string(m[k]) for k in sorted(m))
+    return (write_long(len(m)) + body if m else b"") + write_long(0)
+
+
 def encode_logline(rec: dict) -> bytes:
     """Avro-binary encode one LogLine dict.
 
@@ -67,15 +74,7 @@ def encode_logline(rec: dict) -> bytes:
     union(rec.get("line"), lambda v: out.extend(write_string(v)))
     union(rec.get("source"), lambda v: out.extend(write_string(v)))
 
-    def write_tag(tag: dict) -> None:
-        if tag:
-            out.extend(write_long(len(tag)))
-            for k in sorted(tag):
-                out.extend(write_string(k))
-                out.extend(write_string(tag[k]))
-        out.extend(write_long(0))
-
-    union(rec.get("tag"), write_tag)
+    union(rec.get("tag"), lambda v: out.extend(write_map(v)))
     union(rec.get("logtypeid"), lambda v: out.extend(write_long(v)))
 
     def write_timings(timings: list) -> None:
@@ -88,20 +87,6 @@ def encode_logline(rec: dict) -> bytes:
 
     union(rec.get("timings"), write_timings)
     return bytes(out)
-
-
-def logline_schema_json() -> str:
-    """The LogLine writer schema as JSON — serialized from the single
-    source of truth (model.LOGLINE_AVSC; reference avro/logline.avsc:1-56,
-    embedded literal at avro/logline.go:41-106). Handed to the JVM
-    spark-avro ``to_avro`` when that module's jar is present
-    (encode/transformers.avro_transform's primary path), so the Python
-    fold below and the JVM encoder can never drift apart structurally."""
-    import json
-
-    from syslog_kafka_spark.model import LOGLINE_AVSC
-
-    return json.dumps(LOGLINE_AVSC)
 
 
 def confluent_frame(schema_id: int, body: bytes) -> bytes:

@@ -41,11 +41,16 @@ def encode_tag(key: str, value: str) -> bytes:
     return _len_delimited(1, key.encode()) + _len_delimited(2, value.encode())
 
 
+def encode_tags(tag: dict | None) -> bytes:
+    """Repeated field 3, one Tag message per entry in sorted-key order
+    (Go map order is randomized — see avro_binary note)."""
+    return b"".join(_len_delimited(3, encode_tag(k, tag[k])) for k in sorted(tag or {}))
+
+
 def encode_logline_proto(rec: dict) -> bytes:
     """Proto2-encode one LogLine dict.
 
-    Keys: line str (required), source str|None, tag dict[str,str]|None
-    (sorted-key order; Go map order is randomized — see avro_binary note),
+    Keys: line str (required), source str|None, tag dict[str,str]|None,
     logtypeid int|None, timings list[int]|None.
     """
     out = bytearray()
@@ -55,10 +60,7 @@ def encode_logline_proto(rec: dict) -> bytes:
     out += _len_delimited(1, line.encode())
     if rec.get("source") is not None:
         out += _len_delimited(2, rec["source"].encode())
-    tag = rec.get("tag")
-    if tag:
-        for k in sorted(tag):
-            out += _len_delimited(3, encode_tag(k, tag[k]))
+    out += encode_tags(rec.get("tag"))
     if rec.get("logtypeid") is not None:
         out += _varint_field(4, rec["logtypeid"])
     for t in rec.get("timings") or []:

@@ -9,116 +9,114 @@ Reference parity, one function per transformer:
   LogLine with timings=[received_ms, sent_ms] (two bare longs,
   syslog.go:174) and repeated Tag pairs.
 
-Encoders run as Arrow-batched pandas UDFs (the byte formats are not
-expressible as Catalyst expressions); everything around them — the LogLine
-struct assembly, tag constants, timestamps — is built-in columns, so only
-the final bytes step leaves the JVM. Output schema is the Kafka sink row
-contract: key BINARY, value BINARY, topic STRING [, partition INT].
+Both binary encoders are one Catalyst projection: a ``concat`` of literal
+byte segments (everything fixed per query — framing, tags, logtypeid —
+written once by avro_binary / proto_wire, which alone define the formats)
+around the per-row parts, which are only strings and varints. Nothing
+leaves the JVM, so whole-stage codegen covers the sink path. Output schema
+is the Kafka sink row contract: key BINARY, value BINARY, topic STRING
+[, partition INT].
 """
 
 from __future__ import annotations
 
-from weakref import WeakKeyDictionary
+from functools import reduce
 
-import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
-from pyspark.sql.pandas.functions import pandas_udf
+from pyspark.sql import Column, DataFrame
 
-from syslog_kafka_spark.encode.avro_binary import encode_logline_confluent
-from syslog_kafka_spark.encode.proto_wire import encode_logline_proto
+from syslog_kafka_spark.encode.avro_binary import (
+    confluent_frame,
+    write_long,
+    write_map,
+    write_string,
+)
+from syslog_kafka_spark.encode.proto_wire import _key, _varint_field, encode_tags
 from syslog_kafka_spark.functions.hashes import fnv1a32_partition
 
-
-def _opt(v):
-    """Arrow/pandas null → None (nullable ints surface as float NaN)."""
-    if v is None or v is pd.NA or (isinstance(v, float) and pd.isna(v)):
-        return None
-    return v
+_AVRO_NULL, _AVRO_SOME = write_long(0), write_long(1)  # [null, X] union index
 
 
-def _opt_int(v):
-    v = _opt(v)
-    return None if v is None else int(v)
+def _signed64(u: int) -> int:
+    """The bigint literal holding the 64 bits of ``u``."""
+    return u - (1 << 64) if u >> 63 else u
 
 
-def string_transform(messages: DataFrame, topic: str) -> DataFrame:
-    """R5: value = raw line bytes (StringSerializer parity)."""
+# _uvarint packs a varint's first eight bytes into one bigint, all with
+# their continuation bit set. Indexed by the bit length (1-64) of the
+# value: the varint's length in hex digits, and the continuation bit to
+# clear in that bigint (none when the varint is longer than eight bytes).
+_CONTINUATION_BITS = _signed64(0x8080808080808080)
+_VARINT_BYTES = [-(-bits // 7) for bits in range(1, 65)]
+_HEX_DIGITS = [2 * n for n in _VARINT_BYTES]
+_LAST_CONTINUATION_BIT = [_signed64(0x80 << (64 - 8 * n)) if n <= 8 else 0 for n in _VARINT_BYTES]
+
+
+def _uvarint(v: Column) -> Column:
+    """write_varint of a bigint read as 64 unsigned bits.
+
+    The varint is printed as hex and unhexed. Bytes 1-8 are the 7-bit
+    groups of ``v`` packed into one bigint with every continuation bit
+    set, then the last byte's bit cleared; bytes 9-10 go into a second,
+    small bigint. The varint's length and that last bit are looked up by
+    the bit length of ``v``. The expression is kept small on purpose: the
+    JIT leaves a generated method over 8 KB of bytecode interpreted,
+    which made the encode several times slower."""
+    v = v.cast("bigint")
+    bit_length = F.length(F.bin(v))  # 1-64; 64 for negative v
+    groups = [F.shiftleft(F.shiftrightunsigned(v, 7 * i).bitwiseAND(0x7F), 56 - 8 * i) for i in range(8)]
+    head = reduce(Column.bitwiseOR, groups, F.lit(_CONTINUATION_BITS))
+    head = head.bitwiseXOR(F.element_at(F.lit(_LAST_CONTINUATION_BIT), bit_length))
+    # top = v >>> 63 is byte 10 and also byte 9's continuation bit (the JVM
+    # takes shift counts mod 64, so byte 9 cannot test v >>> 70)
+    top = F.shiftrightunsigned(v, 63)
+    tail = F.shiftrightunsigned(v, 56).bitwiseAND(0x7F).bitwiseOR(F.shiftleft(top, 7))
+    digits = F.concat(
+        F.lpad(F.hex(head), 16, "0"), F.lpad(F.hex(F.shiftleft(tail, 8).bitwiseOR(top)), 4, "0")
+    )
+    return F.unhex(F.left(digits, F.element_at(F.lit(_HEX_DIGITS), bit_length)))
+
+
+def _avro_long(n: Column) -> Column:
+    """write_long: zigzag, then varint."""
+    n = n.cast("bigint")
+    return _uvarint(F.shiftleft(n, 1).bitwiseXOR(F.shiftright(n, 63)))
+
+
+def _avro_opt_string(c: Column) -> Column:
+    """A [null, string] union field."""
+    return F.when(c.isNull(), F.lit(_AVRO_NULL)).otherwise(
+        # the length is never negative, so its zigzag is 2 * length
+        F.concat(F.lit(_AVRO_SOME), _uvarint(F.shiftleft(F.octet_length(c), 1)), c.cast("binary"))
+    )
+
+
+def _proto_string(field_no: int, c: Column) -> Column:
+    """_len_delimited of a UTF-8 string column."""
+    return F.concat(F.lit(_key(field_no, 2)), _uvarint(F.octet_length(c)), c.cast("binary"))
+
+
+def _required(c: Column, name: str) -> Column:
+    """``c``, failing the query on a null instead of letting concat turn
+    the whole value null."""
+    return F.when(c.isNull(), F.raise_error(F.lit(f"LogLine {name} is required"))).otherwise(c)
+
+
+def _epoch_ms(ts: Column) -> Column:
+    return _required(F.unix_millis(ts.cast("timestamp")), "received_ts")
+
+
+def _kafka_rows(messages: DataFrame, topic: str, value: Column) -> DataFrame:
     return messages.select(
         F.lit(None).cast("binary").alias("key"),
-        F.col("line").cast("binary").alias("value"),
+        value.alias("value"),
         F.lit(topic).alias("topic"),
     )
 
 
-def _logline_rows(
-    messages: DataFrame,
-    tags: dict[str, str] | None,
-    logtypeid: int | None,
-    proto_timings: bool,
-) -> DataFrame:
-    """Assemble the LogLine struct column (all Catalyst expressions)."""
-    tag_col = (
-        F.create_map(*[F.lit(x) for kv in sorted(tags.items()) for x in kv])
-        if tags
-        else F.lit(None).cast("map<string,string>")
-    )
-    logtype_col = F.lit(logtypeid).cast("bigint")
-    received_ms = (F.unix_micros(F.col("received_ts").cast("timestamp")) / 1000).cast("bigint")
-    if proto_timings:
-        # [received, sent] bare epoch-ms pair (syslog.go:174)
-        timings = F.array(
-            received_ms, (F.unix_micros(F.current_timestamp()) / 1000).cast("bigint")
-        )
-    else:
-        # [{"received", ms}] single Timing record (syslog.go:155-158)
-        timings = F.array(
-            F.struct(F.lit("received").alias("eventName"), received_ms.alias("value"))
-        )
-    return messages.select(
-        F.struct(
-            F.col("line"),
-            F.col("source"),
-            tag_col.alias("tag"),
-            logtype_col.alias("logtypeid"),
-            timings.alias("timings"),
-        ).alias("logline")
-    )
-
-
-# Per-session probe result for the JVM spark-avro module. The functions
-# in pyspark.sql.avro.functions are thin wrappers over the EXTERNAL
-# spark-avro jar (org.apache.spark:spark-avro_2.13) — the import always
-# succeeds, so availability must be probed by evaluating one row.
-# Weak-keyed by the session so a recycled id() can never inherit a dead
-# session's verdict. A failed probe pins the session to the Python
-# fallback — always CORRECT, just slower; deliberate, since re-probing a
-# genuinely jar-less cluster on every encode would be worse.
-_JVM_AVRO: WeakKeyDictionary = WeakKeyDictionary()
-
-
-def jvm_avro_available(spark) -> bool:
-    """True iff the spark-avro jar is on the session's classpath.
-
-    PROBE RESULT in this build environment: the bundled Spark 4.1
-    distribution ships avro-1.12 core jars but NOT the spark-avro
-    connector (no spark-avro_*.jar under pyspark/jars; no network to
-    fetch it), so this returns False here and avro_transform uses the
-    Arrow-batched Python encoder. On any cluster with the connector
-    (the normal production install), the JVM path engages automatically
-    and the parity test in tests/test_encodings.py gates byte equality.
-    """
-    if spark not in _JVM_AVRO:
-        try:
-            from pyspark.sql.avro.functions import to_avro
-
-            spark.range(1).select(
-                to_avro(F.struct(F.lit("x").alias("a"))).alias("b")
-            ).collect()
-            _JVM_AVRO[spark] = True
-        except Exception:
-            _JVM_AVRO[spark] = False
-    return _JVM_AVRO[spark]
+def string_transform(messages: DataFrame, topic: str) -> DataFrame:
+    """R5: value = raw line bytes (StringSerializer parity)."""
+    return _kafka_rows(messages, topic, F.col("line").cast("binary"))
 
 
 def avro_transform(
@@ -127,73 +125,24 @@ def avro_transform(
     schema_id: int,
     tags: dict[str, str] | None = None,
     logtypeid: int | None = None,
-    use_jvm: bool | None = None,
 ) -> DataFrame:
-    """R6: Confluent-framed Avro LogLine values.
-
-    Two encode paths with byte-identical output (same writer schema,
-    LOGLINE_AVSC; tags pre-sorted at struct construction so map entry
-    order matches the Python writer's sorted-key convention):
-
-    - PRIMARY (jar present): JVM ``to_avro`` + a literal Confluent
-      header concat — whole-stage codegen, no Python in the sink's hot
-      path. At 100 TB the encode projection dominates sink CPU, so
-      JVM-side beats Arrow-Python whenever the spark-avro module exists.
-    - FALLBACK (this sandbox): Arrow-batched pandas UDF over the pure-
-      Python Avro fold (encode/avro_binary.py).
-
-    ``use_jvm=None`` auto-probes per session via jvm_avro_available.
-    """
-    if use_jvm is None:
-        use_jvm = jvm_avro_available(messages.sparkSession)
-    if use_jvm:
-        import struct as _struct
-
-        from pyspark.sql.avro.functions import to_avro
-
-        from syslog_kafka_spark.encode.avro_binary import (
-            CONFLUENT_MAGIC,
-            logline_schema_json,
-        )
-
-        rows = _logline_rows(messages, tags, logtypeid, proto_timings=False)
-        header = CONFLUENT_MAGIC + _struct.pack(">I", schema_id)
-        return rows.select(
-            F.lit(None).cast("binary").alias("key"),
-            F.concat(
-                F.lit(header), to_avro(F.col("logline"), logline_schema_json())
-            ).alias("value"),
-            F.lit(topic).alias("topic"),
-        )
-
-    @pandas_udf("binary")
-    def enc(rows: pd.DataFrame) -> pd.Series:
-        # struct columns arrive as a DataFrame of fields (Arrow batch)
-        return rows.apply(
-            lambda r: encode_logline_confluent(
-                {
-                    "line": _opt(r["line"]),
-                    "source": _opt(r["source"]),
-                    "tag": dict(r["tag"]) if _opt(r["tag"]) is not None else None,
-                    "logtypeid": _opt_int(r["logtypeid"]),
-                    "timings": [
-                        {"eventName": t["eventName"], "value": int(t["value"])}
-                        for t in r["timings"]
-                    ]
-                    if _opt(r["timings"]) is not None
-                    else None,
-                },
-                schema_id,
-            ),
-            axis=1,
-        )
-
-    rows = _logline_rows(messages, tags, logtypeid, proto_timings=False)
-    return rows.select(
-        F.lit(None).cast("binary").alias("key"),
-        enc(F.col("logline")).alias("value"),
-        F.lit(topic).alias("topic"),
+    """R6: Confluent-framed Avro LogLine values, byte-identical to
+    encode_logline_confluent of the same record (``tags={}`` is an empty
+    map, not a null one). A null line or source encodes as union 0; a null
+    received_ts fails the query."""
+    tag = _AVRO_NULL if tags is None else _AVRO_SOME + write_map(tags)
+    ltid = _AVRO_NULL if logtypeid is None else _AVRO_SOME + write_long(logtypeid)
+    # timings: union 1, one-item block of {"received", ms}, end marker
+    timings_head = _AVRO_SOME + write_long(1) + write_string("received")
+    value = F.concat(
+        F.lit(confluent_frame(schema_id, b"")),
+        _avro_opt_string(F.col("line")),
+        _avro_opt_string(F.col("source")),
+        F.lit(tag + ltid + timings_head),
+        _avro_long(_epoch_ms(F.col("received_ts"))),
+        F.lit(write_long(0)),
     )
+    return _kafka_rows(messages, topic, value)
 
 
 def proto_transform(
@@ -202,31 +151,21 @@ def proto_transform(
     tags: dict[str, str] | None = None,
     logtypeid: int | None = None,
 ) -> DataFrame:
-    """R7: bare proto.Marshal LogLine values (no registry framing)."""
-
-    @pandas_udf("binary")
-    def enc(rows: pd.DataFrame) -> pd.Series:
-        return rows.apply(
-            lambda r: encode_logline_proto(
-                {
-                    "line": _opt(r["line"]),
-                    "source": _opt(r["source"]),
-                    "tag": dict(r["tag"]) if _opt(r["tag"]) is not None else None,
-                    "logtypeid": _opt_int(r["logtypeid"]),
-                    "timings": [int(t) for t in r["timings"]]
-                    if _opt(r["timings"]) is not None
-                    else None,
-                }
-            ),
-            axis=1,
-        )
-
-    rows = _logline_rows(messages, tags, logtypeid, proto_timings=True)
-    return rows.select(
-        F.lit(None).cast("binary").alias("key"),
-        enc(F.col("logline")).alias("value"),
-        F.lit(topic).alias("topic"),
+    """R7: bare proto.Marshal LogLine values (no registry framing),
+    byte-identical to encode_logline_proto with timings [received ms, sent
+    ms], sent being the batch's current_timestamp. A null source omits
+    field 2; a null line or received_ts fails the query."""
+    fixed = encode_tags(tags) + (b"" if logtypeid is None else _varint_field(4, logtypeid))
+    source = F.col("source")
+    value = F.concat(
+        _proto_string(1, _required(F.col("line"), "line")),
+        F.when(source.isNull(), F.lit(b"")).otherwise(_proto_string(2, source)),
+        F.lit(fixed + _key(5, 0)),
+        _uvarint(_epoch_ms(F.col("received_ts"))),
+        F.lit(_key(5, 0)),
+        _uvarint(F.unix_millis(F.current_timestamp())),
     )
+    return _kafka_rows(messages, topic, value)
 
 
 def with_fnv1a_partition(records: DataFrame, key_col: str, num_partitions: int) -> DataFrame:

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import os
 import uuid
+from contextlib import contextmanager
 from weakref import WeakKeyDictionary
 
 import pyspark.sql.functions as F
@@ -100,6 +101,32 @@ def normalize_event_ts(raw: DataFrame) -> DataFrame:
     return raw
 
 
+@contextmanager
+def _pinned_shuffle_partitions(spark: SparkSession, parts: int | None):
+    """Pin ``spark.sql.shuffle.partitions`` (and so the state-store
+    partition count) to ``parts`` for the block, restoring the session
+    value after it. ``$SPARK_GRAFT_STREAM_STATE_PARTITIONS`` overrides
+    every pin; ``parts=None`` pins nothing and ignores the env knob."""
+    if parts is None:
+        yield
+        return
+    env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
+    if env:
+        try:
+            parts = int(env)
+        except ValueError as exc:
+            raise ValueError(
+                "SPARK_GRAFT_STREAM_STATE_PARTITIONS must be an integer, "
+                f"got {env!r}"
+            ) from exc
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
 def drain(
     df: DataFrame,
     *,
@@ -155,29 +182,17 @@ def drain(
     noise, not a property of the partition count — tiny-state gates are
     provider-bound at every replication since."""
     spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     prev_ndb = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    if env and state_partitions is not None:
+    with _pinned_shuffle_partitions(spark, state_partitions):
+        if not no_data_batch:
+            spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
         try:
-            state_partitions = int(env)
-        except ValueError as exc:
-            raise ValueError(
-                "SPARK_GRAFT_STREAM_STATE_PARTITIONS must be an integer, "
-                f"got {env!r}"
-            ) from exc
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    if not no_data_batch:
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
-        name = f"gate_{uuid.uuid4().hex[:8]}"
-        q = df.writeStream.format("memory").queryName(name).outputMode(mode).start()
-        q.processAllAvailable()
-        q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prev_ndb)
+            name = f"gate_{uuid.uuid4().hex[:8]}"
+            q = df.writeStream.format("memory").queryName(name).outputMode(mode).start()
+            q.processAllAvailable()
+            q.stop()
+        finally:
+            spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prev_ndb)
     return spark.table(name)
 
 
@@ -526,22 +541,10 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partitions the per-partition provider init + commit dominates, and
     # the foreachBatch writer then also lands 32 near-empty parquet files
     # per batch instead of 8. Same env override as every other pin.
-    env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    try:
-        parts = int(env) if env else 8
-    except ValueError as exc:
-        raise ValueError(
-            "SPARK_GRAFT_STREAM_STATE_PARTITIONS must be an integer, "
-            f"got {env!r}"
-        ) from exc
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    try:
+    with _pinned_shuffle_partitions(spark, 8):
         q = pairs.writeStream.foreachBatch(write_batch).outputMode("append").start()
         q.processAllAvailable()
         q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     try:
         # recursiveFileLookup: the batch-N subdirs are layout, not hive
         # partitions — read every parquet file beneath out_dir flat.
@@ -676,17 +679,7 @@ def stream_state_store_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     # inits + commits to write ~9 keys, and the statestore read-back then
     # scans 32 state files instead of 8. Keys/values are partition-
     # independent, so the read-back result is unchanged.
-    env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    try:
-        parts = int(env) if env else 8
-    except ValueError as exc:
-        raise ValueError(
-            "SPARK_GRAFT_STREAM_STATE_PARTITIONS must be an integer, "
-            f"got {env!r}"
-        ) from exc
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    try:
+    with _pinned_shuffle_partitions(spark, 8):
         q = (
             counts.writeStream.format("memory")
             .queryName(name)
@@ -696,8 +689,6 @@ def stream_state_store_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.processAllAvailable()
         q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     state = spark.read.format("statestore").load(ckpt)
     return (
         state.select(
@@ -844,17 +835,7 @@ def stream_available_now_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Same tiny-state right-sizing as drain(state_partitions=8): per-day
     # keys, one planned batch — provider overhead dominates at 32
     # (measured 1.75 s → 0.86 s, r13 sweep). Same env override applies.
-    env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    try:
-        parts = int(env) if env else 8
-    except ValueError as exc:
-        raise ValueError(
-            "SPARK_GRAFT_STREAM_STATE_PARTITIONS must be an integer, "
-            f"got {env!r}"
-        ) from exc
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    try:
+    with _pinned_shuffle_partitions(spark, 8):
         q = (
             agg.writeStream.format("memory")
             .queryName(name)
@@ -872,8 +853,6 @@ def stream_available_now_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
                 raise RuntimeError("AvailableNow drain did not finish in 120s")
         finally:
             q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(name).filter(F.col("n_events") > 0).orderBy("day")
 
 

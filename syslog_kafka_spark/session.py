@@ -8,9 +8,12 @@ master URL, which is only applied when no master is configured.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger("syslog_kafka_spark")
 
 # Defaults chosen for the target workload (star-schema joins + wide scans):
 # - AQE re-plans shuffles at runtime (coalesces small partitions, converts
@@ -70,6 +73,7 @@ def _warm_python_workers(spark: SparkSession) -> None:
 
         yield from batches
 
+    step = "mapInArrow worker pool"
     try:
         import pyspark.sql.functions as F
         from pyspark.sql.pandas.functions import pandas_udf
@@ -86,6 +90,8 @@ def _warm_python_workers(spark: SparkSession) -> None:
         # The scalar pandas-UDF path keys a SEPARATE worker pool (the
         # factory keys on worker env, which differs from mapInArrow), so
         # warm it too — it serves every ArrowEvalPython stage.
+        step = "pandas-UDF worker pool"
+
         @pandas_udf("long")
         def _warm_identity(s):
             return s
@@ -101,7 +107,7 @@ def _warm_python_workers(spark: SparkSession) -> None:
         # Warm-up must never fail a session build (e.g. a stripped-down
         # runtime without pandas); the first Python query then simply
         # pays the bring-up itself, as before.
-        pass
+        log.warning("Python worker warm-up failed at the %s step", step, exc_info=True)
 
 
 def get_spark(app_name: str = "syslog-kafka-spark", **overrides: str) -> SparkSession:

@@ -12,6 +12,9 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
+from pyspark.errors import SparkRuntimeException
 
 from syslog_kafka_spark.encode.avro_binary import (
     confluent_frame,
@@ -199,35 +202,106 @@ def test_decode_udfs_batch(spark):
     assert pout.line == "x" and list(pout.timings) == [1, 2]
 
 
-def test_jvm_avro_parity_or_documented_absence(spark):
-    """VERDICT r5 probe: if the JVM spark-avro module is present, the
-    primary encode path (to_avro + literal Confluent header) must be
-    BYTE-IDENTICAL to the Arrow-Python fold; if absent (this sandbox's
-    distribution ships no spark-avro_*.jar and pip/network are off), the
-    probe must say so and the fallback engages — an environmental seam,
-    like the Kafka broker."""
-    import os
+# Timestamps Spark can hold: 0001-01-01 .. 9999-12-31 23:59:59.999 UTC.
+_MS_MIN, _MS_MAX = -62_135_596_800_000, 253_402_300_799_999
+_text = st.text(alphabet=st.characters(exclude_categories=("Cs",)), max_size=40)
+_long_line = st.builds(lambda ch, n: ch * n, st.sampled_from("aé語"), st.integers(16_400, 17_000))
+_rows = st.lists(
+    st.tuples(
+        st.one_of(st.none(), st.just(""), _text, _long_line),
+        st.one_of(st.none(), st.just(""), _text),
+        # 0, ±1, the 1-byte zigzag edge 63/64, negatives (10-byte proto
+        # varints), year 1 and year 9999
+        st.one_of(
+            st.sampled_from([0, 1, -1, 63, 64, -64, -65, _MS_MIN, _MS_MAX]),
+            st.integers(_MS_MIN, _MS_MAX),
+        ),
+    ),
+    min_size=1,
+    max_size=12,
+)
+_tags = st.one_of(
+    st.none(), st.just({}), st.dictionaries(st.text(min_size=1, max_size=8), _text, min_size=1, max_size=4)
+)
+_logtypeid = st.one_of(
+    st.none(), st.sampled_from([0, -1, -(2**63), 2**63 - 1]), st.integers(-(2**63), 2**63 - 1)
+)
 
-    import pyspark
 
-    from syslog_kafka_spark.encode.transformers import (
-        avro_transform,
-        jvm_avro_available,
+def _messages(spark, rows):
+    return spark.createDataFrame(rows, "line string, source string, ms bigint").select(
+        "line", "source", F.timestamp_millis("ms").alias("received_ts")
     )
 
-    msgs = spark.createDataFrame(
-        [("GET / 200", "collector01", "2024-01-01 00:00:00")],
-        ["line", "source", "received_ts"],
-    ).withColumn("received_ts", F.col("received_ts").cast("timestamp"))
 
-    if not jvm_avro_available(spark):
-        jars = os.listdir(os.path.join(os.path.dirname(pyspark.__file__), "jars"))
-        assert not any("spark-avro" in j for j in jars), (
-            "probe said unavailable but the connector jar exists — probe bug"
-        )
-        pytest.skip("spark-avro connector jar absent (environmental seam)")
+def test_transforms_match_the_python_encoders(spark):
+    """avro_transform / proto_transform bytes equal encode_logline_confluent
+    / encode_logline_proto row for row. Proto is compared up to the 'sent'
+    timing, which is the batch's current_timestamp."""
+    from syslog_kafka_spark.encode.transformers import avro_transform, proto_transform
 
-    kw = dict(schema_id=5, tags={"dc": "ams"}, logtypeid=9)
-    jvm = avro_transform(msgs, "logs", use_jvm=True, **kw).collect()[0]
-    py = avro_transform(msgs, "logs", use_jvm=False, **kw).collect()[0]
-    assert jvm.value == py.value, "JVM to_avro bytes diverge from the Python fold"
+    edges = [
+        (None, None, 0), ("", "", 1), ("é語\x00", "host", -1), ("a" * 16_400, "", 63),
+        ("語" * 5_500, None, 64), ("x", "y", -65), ("x", "y", _MS_MIN), ("x", "y", _MS_MAX),
+    ]
+
+    @settings(max_examples=12, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+    @given(rows=_rows, tags=_tags, logtypeid=_logtypeid, schema_id=st.integers(0, 2**31 - 1))
+    @example(rows=edges, tags=None, logtypeid=None, schema_id=0)
+    @example(rows=edges, tags={}, logtypeid=0, schema_id=1)
+    @example(rows=edges, tags={"dc": "ams", "é": "", "a": "語"}, logtypeid=-(2**63), schema_id=2**31 - 1)
+    def check(rows, tags, logtypeid, schema_id):
+        msgs = _messages(spark, rows)
+        got = avro_transform(msgs, "t", schema_id, tags, logtypeid).collect()
+        for (line, source, ms), row in zip(rows, got, strict=True):
+            rec = {"line": line, "source": source, "tag": tags, "logtypeid": logtypeid,
+                   "timings": [{"eventName": "received", "value": ms}]}
+            assert row.value == encode_logline_confluent(rec, schema_id), rec
+
+        proto_rows = [r for r in rows if r[0] is not None]
+        if not proto_rows:
+            return
+        got = proto_transform(_messages(spark, proto_rows), "t", tags, logtypeid).collect()
+        for (line, source, ms), row in zip(proto_rows, got, strict=True):
+            rec = {"line": line, "source": source, "tag": tags, "logtypeid": logtypeid, "timings": [ms]}
+            want = encode_logline_proto(rec)
+            assert row.value[: len(want)] == want, rec
+            assert row.value[len(want)] == 0x28  # then field 5 again: the sent timing
+
+    check()
+
+
+@pytest.mark.parametrize("encoding", ["avro", "proto"])
+def test_null_received_ts_fails_the_query(spark, encoding):
+    from syslog_kafka_spark.encode.transformers import avro_transform, proto_transform
+
+    msgs = spark.createDataFrame([("x", "s", None)], "line string, source string, received_ts timestamp")
+    out = avro_transform(msgs, "t", 1) if encoding == "avro" else proto_transform(msgs, "t")
+    with pytest.raises(SparkRuntimeException, match="received_ts is required"):
+        out.collect()
+
+
+def test_null_proto_line_fails_the_query(spark):
+    from syslog_kafka_spark.encode.transformers import proto_transform
+
+    with pytest.raises(SparkRuntimeException, match="line is required"):
+        proto_transform(_messages(spark, [(None, "s", 0)]), "t").collect()
+
+
+def test_null_avro_line_and_source_encode_as_union_0(spark):
+    from syslog_kafka_spark.encode.transformers import avro_transform
+
+    (row,) = avro_transform(_messages(spark, [(None, None, 1)]), "t", 7).collect()
+    # header, line 0x00, source 0x00, tag 0x00, logtypeid 0x00, timings
+    assert row.value == b"\x00\x00\x00\x00\x07" + b"\x00" * 4 + b"\x02\x02\x10received\x02\x00"
+
+
+def test_transform_plans_have_no_python_eval(spark):
+    """Both binary encoders stay one Catalyst projection: no Python UDF
+    node may come back into their executed plans."""
+    from syslog_kafka_spark.encode.transformers import avro_transform, proto_transform
+
+    msgs = _messages(spark, [("x", "s", 0)])
+    for out in (avro_transform(msgs, "t", 1, {"dc": "ams"}, 3), proto_transform(msgs, "t", {"dc": "ams"}, 3)):
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan

@@ -433,3 +433,30 @@ def test_stream_cms_state_is_bounded_and_mass_preserving(spark, sf_dir):
     )
     for r in range(4):
         assert sum(x.cnt for x in rows if x.r == r) == n_tokens
+
+
+def test_shuffle_partition_pin_rule(spark, monkeypatch):
+    """The state-partition pin: ``parts`` (or the env override, if set) for
+    the block, the session value restored after it even on error; None
+    pins nothing and leaves the env unread."""
+    from syslog_kafka_spark.plans.stream_gated import _pinned_shuffle_partitions
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", raising=False)
+    with _pinned_shuffle_partitions(spark, 8):
+        assert spark.conf.get(key) == "8"
+    assert spark.conf.get(key) == before
+
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "3")
+    with pytest.raises(RuntimeError), _pinned_shuffle_partitions(spark, 8):
+        assert spark.conf.get(key) == "3"
+        raise RuntimeError
+    assert spark.conf.get(key) == before
+
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "many")
+    with _pinned_shuffle_partitions(spark, None):
+        assert spark.conf.get(key) == before
+    with pytest.raises(ValueError, match="must be an integer"), _pinned_shuffle_partitions(spark, 8):
+        pass
+    assert spark.conf.get(key) == before
